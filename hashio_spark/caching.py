@@ -1,7 +1,7 @@
 """Release handles for operator-internal persisted intermediates.
 
-Several operators (banded LSH in ``operators/dedupe``,
-``operators/similarity``, and their oracle twins in ``queries``) persist a
+Several operators (banded LSH in ``operators/dedupe`` and
+``operators/decontaminate``, ``operators/similarity``) persist a
 narrow intermediate because it feeds multiple consumers inside the returned
 plan — without the persist, Catalyst recomputes the whole upstream per
 consumer (measured 33 s → 7 s at sf0.1).  The persist must outlive the
@@ -35,6 +35,12 @@ def track(out: DataFrame, *intermediates: DataFrame) -> DataFrame:
     handles = tuple(getattr(out, _ATTR, ())) + intermediates
     setattr(out, _ATTR, handles)
     return out
+
+
+def carry(out: DataFrame, src: DataFrame) -> DataFrame:
+    """Attach ``src``'s handles to ``out``, a frame derived from it —
+    ``select``/rename/``orderBy`` return a new DataFrame without them."""
+    return track(out, *getattr(src, _ATTR, ()))
 
 
 def release(df: DataFrame) -> None:

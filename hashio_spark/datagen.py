@@ -32,7 +32,6 @@ NULLTEXT_MOD = 89
 OOO_MOD = 83
 SKEW_MOD = 997
 DRIFT_PARTITION = 0
-N_KINDS = ("text", "image", "audio", "video")
 
 
 def _h(*cols) -> F.Column:

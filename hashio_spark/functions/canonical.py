@@ -30,8 +30,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-SPAN_SCHEMA = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-
 
 def canonical_span_expr(spans_col: Column | str = "spans") -> Column:
     """Canonical string for a spans array, in array order.

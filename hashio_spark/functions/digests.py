@@ -256,6 +256,3 @@ def minhash4_md5_arrow(with_sets: bool = False):
 
         _minhash_udf_cache[with_sets] = _make(with_sets)
     return _minhash_udf_cache[with_sets]
-
-
-ALGOS = _PARITY_ALGOS

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-VIOLATION_COLS = ("doc_id", "partition_id", "rule", "detail")
-
 
 def _violations(df: DataFrame, rule: str, detail: F.Column) -> DataFrame:
     return df.select(

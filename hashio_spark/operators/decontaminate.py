@@ -18,6 +18,11 @@ pipelines.  Expressed Spark-first:
   path); ``hashed=False`` joins on raw shingle strings (oracle-parity
   path — replicable in any SQL engine).
 
+The paraphrase-level :func:`crosscorpus_neardup` is two stages over
+caller-built band frames and shingle sets, :func:`bench_present` and
+:func:`bipartite_neardup`; the registry's md5 ``crosscorpus_neardup``
+query calls the same stages with its own bands and sets.
+
 Extends the reference's dedupe family (``/root/reference/lib/hashio/
 encoder.py:463-500``) from identical-content to cross-corpus n-gram
 containment.
@@ -117,54 +122,72 @@ def crosscorpus_neardup(
     Returns all (train, bench, jaccard) matches; anti-join ``train``
     against ``.select(key_col)`` of the result to drop flagged docs.
     """
-    from hashio_spark.functions.text import word_shingles_from_tokens
     from hashio_spark.operators.dedupe import minhash_band_values, minhash_signatures
 
-    t_bands = minhash_band_values(
-        minhash_signatures(train, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k),
-        n_bands=n_bands, n_perm=n_perm,
-    )
-    b_bands = minhash_band_values(
-        minhash_signatures(benchmark, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k),
-        n_bands=n_bands, n_perm=n_perm,
-    )
-    bench_bands = F.broadcast(b_bands.withColumnRenamed("key", "bench_key"))
-    # only bands the benchmark actually occupies can produce candidates —
-    # count sizes over that (tiny) slice, not the full banded corpus.
-    # hits feeds two consumers (sizes + ok); persisted so the minhash
-    # upstream runs once — caller releases via hashio_spark.caching.release
-    hits = t_bands.join(
-        F.broadcast(b_bands.select("band_id", "band_val").distinct()),
+    def _bands(df: DataFrame) -> DataFrame:
+        sig = minhash_signatures(df, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k)
+        return minhash_band_values(sig, n_bands=n_bands, n_perm=n_perm)
+
+    def _sets(df: DataFrame) -> DataFrame:
+        toked = df.select(F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks"))
+        return toked.select("key", F.array_distinct(word_shingles_from_tokens("_toks", shingle_k)).alias("sh"))
+
+    b_bands = _bands(benchmark)
+    # hits feeds two consumers (sizes + candidates); persisted so the
+    # minhash upstream runs once — caller releases via caching.release
+    hits = bench_present(_bands(train), b_bands).persist()
+    out = bipartite_neardup(hits, b_bands, _sets(train), _sets(benchmark), max_band_size, min_jaccard)
+    return track(out, hits)
+
+
+def bench_present(train_bands: DataFrame, bench_bands: DataFrame) -> DataFrame:
+    """The rows of a ``(key, band_id, band_val)`` train band frame whose
+    band the benchmark also occupies — a semi-join against the broadcast
+    distinct benchmark bands.  Only these bands can produce candidates,
+    so :func:`bipartite_neardup` counts band sizes over this slice
+    instead of the full banded corpus (output-identical: a band absent
+    from the benchmark yields no candidates whatever its size)."""
+    return train_bands.join(
+        F.broadcast(bench_bands.select("band_id", "band_val").distinct()),
         ["band_id", "band_val"],
         "left_semi",
-    ).persist()
+    )
+
+
+def bipartite_neardup(
+    hits: DataFrame,
+    bench_bands: DataFrame,
+    train_sets: DataFrame,
+    bench_sets: DataFrame,
+    max_band_size: int,
+    min_jaccard: float,
+) -> DataFrame:
+    """(train_key, bench_key, jaccard) — the bipartite LSH candidate and
+    exact-Jaccard verify stage of every cross-corpus near-dup tier,
+    whatever its signature kernel, band encoding or tokenizer.
+
+    ``hits`` is :func:`bench_present` of the train bands and
+    ``bench_bands`` the benchmark's ``(key, band_id, band_val)`` frame;
+    ``train_sets``/``bench_sets`` are ``(key, sh)`` distinct shingle
+    sets.  Train bands with more than ``max_band_size`` members are
+    dropped; the benchmark bands and sets are broadcast, so the train
+    side is never shuffled for a join.  ``hits`` is read twice (sizes +
+    candidates): persist it when its upstream is costly.  Jaccard is
+    rounded to 6 places before the ``min_jaccard`` cut."""
     sizes = hits.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
     ok = hits.join(
         F.broadcast(sizes.filter(F.col("n") <= max_band_size)),
         ["band_id", "band_val"],
     )
     cand = (
-        ok.join(bench_bands, ["band_id", "band_val"])
+        ok.join(F.broadcast(bench_bands.withColumnRenamed("key", "bench_key")), ["band_id", "band_val"])
         .select(F.col("key").alias("train_key"), "bench_key")
         .distinct()
     )
-
-    def _sets(df: DataFrame, out: str) -> DataFrame:
-        toked = df.select(
-            F.col(key_col).alias(out), F.split(F.col(text_col), r"\s+").alias("_toks")
-        )
-        return toked.select(
-            out, F.array_distinct(word_shingles_from_tokens("_toks", shingle_k)).alias(f"_sh_{out}")
-        )
-
-    j = cand.join(_sets(train, "train_key"), "train_key").join(
-        F.broadcast(_sets(benchmark, "bench_key")), "bench_key"
-    )
-    inter = F.size(F.array_intersect(F.col("_sh_train_key"), F.col("_sh_bench_key"))).cast("double")
-    union = F.size(F.array_union(F.col("_sh_train_key"), F.col("_sh_bench_key"))).cast("double")
+    tr = train_sets.select(F.col("key").alias("train_key"), F.col("sh").alias("sh_t"))
+    be = bench_sets.select(F.col("key").alias("bench_key"), F.col("sh").alias("sh_b"))
+    j = cand.join(tr, "train_key").join(F.broadcast(be), "bench_key")
+    inter = F.size(F.array_intersect(F.col("sh_t"), F.col("sh_b"))).cast("double")
+    union = F.size(F.array_union(F.col("sh_t"), F.col("sh_b"))).cast("double")
     jac = F.round(inter / union, 6)
-    out = (
-        j.select("train_key", "bench_key", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-    return track(out, hits)
+    return j.select("train_key", "bench_key", jac.alias("jaccard")).filter(F.col("jaccard") >= min_jaccard)

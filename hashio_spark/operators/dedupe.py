@@ -12,7 +12,9 @@ Five tiers, all shuffle-architected for 10^12-row inputs:
   is n_docs × n_bands, independent of document size).  Giant bands (a
   band value shared by a near-dup cluster of size c produces c² pairs)
   are capped with ``max_band_size`` — standard LSH practice to stop a
-  boilerplate cluster from quadratic blowup.
+  boilerplate cluster from quadratic blowup.  The band self-join is
+  :func:`lsh_self_join`, which the hyperplane tier and the registry's
+  LSH queries call too.
 * :func:`simhash64` — 64-bit SimHash via bit-majority over token hashes,
   computed with array expressions (no UDF); near-dups = small Hamming
   distance, bucketed by 16-bit chunks for candidate generation.
@@ -200,20 +202,32 @@ def lsh_candidate_pairs(
     # tracked on the returned DataFrame: callers release it after their
     # consuming action via hashio_spark.caching.release(result).
     bands = bands.persist()
+    from hashio_spark.caching import track
 
+    return track(lsh_self_join(bands, max_band_size), bands)
+
+
+def lsh_self_join(bands: DataFrame, max_band_size: int = 64) -> DataFrame:
+    """(key_a, key_b) pairs, ``key_a < key_b``, of keys sharing a band in
+    a ``(key, band_id, band_val)`` frame — the self-join stage of every
+    banded-LSH tier (MinHash and hyperplane), whatever its signature
+    kernel and band encoding.
+
+    Bands with one member yield no pair, and bands with more than
+    ``max_band_size`` members are dropped whole (the quadratic-blowup
+    guard).  ``bands`` is read three times (sizes + both join sides), so
+    the caller persists it, or the frame it is projected from, when its
+    upstream is costly."""
     sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
     ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band_size)), ["band_id", "band_val"])
     a = ok.select(F.col("key").alias("key_a"), "band_id", "band_val")
     b = ok.select(F.col("key").alias("key_b"), "band_id", "band_val")
-    out = (
+    return (
         a.join(b, ["band_id", "band_val"])
         .filter(F.col("key_a") < F.col("key_b"))
         .select("key_a", "key_b")
         .distinct()
     )
-    from hashio_spark.caching import track
-
-    return track(out, bands)
 
 
 def ngram_jaccard_pairs(

@@ -176,7 +176,7 @@ def duplicate_clusters(pairs: DataFrame, key_a: str, key_b: str) -> DataFrame:
     """(key, cluster_id, keep) from near-dup pairs: cluster_id is the
     min key of the component, ``keep`` marks the one representative —
     the corpus-side drop list is ``filter(~keep)``."""
-    from hashio_spark.caching import track
+    from hashio_spark.caching import carry
 
     cc = connected_components(pairs, key_a, key_b)
     out = cc.select(
@@ -184,4 +184,4 @@ def duplicate_clusters(pairs: DataFrame, key_a: str, key_b: str) -> DataFrame:
         F.col("component").alias("cluster_id"),
         (F.col("node") == F.col("component")).alias("keep"),
     )
-    return track(out, *getattr(cc, "_hashio_persisted", ()))
+    return carry(out, cc)

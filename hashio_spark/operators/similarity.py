@@ -219,6 +219,8 @@ def neardup_pairs(
     pay a corpus-wide dedupe for well-formed inputs."""
     import math
 
+    from hashio_spark.operators.dedupe import lsh_self_join
+
     if bits_per_band is None:
         n = emb.count()
         bits_per_band = min(34, max(4, math.ceil(math.log2(max(n, 2) / target_bucket))))
@@ -242,18 +244,7 @@ def neardup_pairs(
             "band_id", "band_val"
         ),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= max_bucket)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("key").alias("key_a"), "band_id", "band_val")
-    b = ok.select(F.col("key").alias("key_b"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b")
-        .distinct()
-    )
+    cand = lsh_self_join(bands, max_bucket)
     va = base.select(F.col("key").alias("key_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
     vb = base.select(F.col("key").alias("key_b"), F.col("v").alias("v_b"), F.col("nrm").alias("n_b"))
     out = (

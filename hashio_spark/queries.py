@@ -57,9 +57,9 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 #     lineitem/orders/events cost +0.2-0.7 s per leg
 #     (latest_event_per_user 0.98 → 0.24 s WITHOUT the fan-out), while
 #     fanning documents/embeddings saves multiple seconds per leg.
-_FANOUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(64 * 1024 * 1024)))
-_FANOUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(4 * 1024 * 1024)))
-_FANOUT_MIN_ROW_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_ROW_BYTES", "64"))
+_FANOUT_MAX_BYTES = 64 * 1024 * 1024
+_FANOUT_MIN_BYTES = 4 * 1024 * 1024
+_FANOUT_MIN_ROW_BYTES = 64
 
 
 def _table_rows(path: str) -> int:
@@ -361,56 +361,66 @@ def dedupe_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs: docs agreeing on any MinHash band
     (banding = 2 sigs/band over the 4-sig signature).
 
-    Bands shared by more than MAX_BAND docs are dropped — the standard
-    LSH guard against quadratic blowup on degenerate/boilerplate clusters
+    Bands shared by more than 64 docs are dropped — the standard LSH
+    guard against quadratic blowup on degenerate/boilerplate clusters
     (the synthetic corpus has a tiny vocabulary, so uncapped banding
-    explodes at sf≥0.1).  The cap is part of the operator contract and is
-    replicated exactly in the oracle SQL."""
-    MAX_BAND = 64
-    # shingle-less docs (<3 tokens) carry NULL signatures; drop them before
-    # banding or concat_ws's null-skip would co-band every short doc.
-    # The drop tests TOKEN COUNT on the scan column, not sig0 IS NOT
-    # NULL: a null-check on the signature alias pushes down through the
-    # signature projection and re-evaluates the whole shingle+md5
-    # pipeline per row just for the check (BENCH.md finding #8), while
-    # size(split(text)) evaluates one cheap split at the scan — and sig0
-    # is null exactly iff the doc has <3 tokens.
-    pairs, enr = _lsh_candidate_pairs(spark, sf_dir, MAX_BAND)
+    explodes at sf≥0.1).  The cap is part of the operator contract
+    (``operators/dedupe.lsh_self_join``) and is replicated exactly in
+    the oracle SQL."""
     from hashio_spark.caching import track
 
+    pairs, enr = _lsh_candidate_pairs(spark, sf_dir)
     return track(pairs, enr)
 
 
-def _lsh_candidate_pairs(spark, sf_dir, max_band: int, with_sets: bool = False):
-    """Shared core of the md5-minhash LSH queries: (pairs, persisted
-    per-doc frame).  The persisted frame carries the four signatures —
-    and, when ``with_sets``, the distinct shingle set — so every
-    consumer (band sizes, both self-join sides, a verify stage) reads
-    one materialization of the shingle+md5 pipeline instead of
-    recomputing it.  Both bands come from ONE pass via
-    explode(array(b0, b1)): the former b0 ∪ b1 union recomputed the
-    upstream per branch (measured: bands materialization 3.2 s → 2.2 s
-    at sf1.0)."""
-    sig = minhash_signature(spark, sf_dir, drop_short=True, with_sets=with_sets)
-    enr = sig.persist()
-    bands_col = F.explode(
+def _md5_bands(sig: DataFrame) -> DataFrame:
+    """(key, band_id, band_val) of an md5 signature frame: band 0 joins
+    sig0/sig1 and band 1 sig2/sig3, both from ONE explode (a b0 ∪ b1
+    union recomputed the upstream per branch — measured 3.2 s → 2.2 s
+    at sf1.0).  md5 hex never contains ``_``, so these group exactly
+    like the oracle's ``'b0_…'``/``'b1_…'`` band strings."""
+    bands = F.explode(
         F.array(
-            F.concat_ws("_", F.lit("b0"), "sig0", "sig1"),
-            F.concat_ws("_", F.lit("b1"), "sig2", "sig3"),
+            F.struct(F.lit(0).alias("band_id"), F.concat_ws("_", "sig0", "sig1").alias("band_val")),
+            F.struct(F.lit(1).alias("band_id"), F.concat_ws("_", "sig2", "sig3").alias("band_val")),
         )
     )
-    bands = enr.select("doc_id", bands_col.alias("band"))
-    sizes = bands.groupBy("band").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band)), "band")
-    a = ok.select(F.col("doc_id").alias("doc_a"), "band")
-    b = ok.select(F.col("doc_id").alias("doc_b"), "band")
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return pairs, enr
+    return sig.select(F.col("doc_id").alias("key"), bands.alias("_b")).select("key", "_b.band_id", "_b.band_val")
+
+
+def _lsh_candidate_pairs(spark, sf_dir, with_sets: bool = False):
+    """Shared core of the md5-minhash LSH queries: ((doc_a, doc_b)
+    pairs from ``operators/dedupe.lsh_self_join``, persisted per-doc
+    frame).  The persisted frame carries the four signatures — and,
+    when ``with_sets``, the distinct shingle set — so every consumer
+    (band sizes, both self-join sides, a verify stage) reads one
+    materialization of the shingle+md5 pipeline instead of recomputing
+    it.
+
+    Shingle-less docs (<3 tokens) carry NULL signatures and are dropped
+    before banding, or concat_ws's null-skip would co-band every short
+    doc.  The drop tests TOKEN COUNT on the scan column (``drop_short``),
+    not sig0 IS NOT NULL: a null-check on the signature alias pushes
+    down through the signature projection and re-evaluates the whole
+    shingle+md5 pipeline per row just for the check (BENCH.md finding
+    #8)."""
+    from hashio_spark.operators.dedupe import lsh_self_join
+
+    enr = minhash_signature(spark, sf_dir, drop_short=True, with_sets=with_sets).persist()
+    pairs = lsh_self_join(_md5_bands(enr), max_band_size=64)
+    return pairs.select(F.col("key_a").alias("doc_a"), F.col("key_b").alias("doc_b")), enr
+
+
+def _lsh_candidate_sets(spark, sf_dir):
+    """(doc_a, doc_b, sh_a, sh_b): the LSH candidates with both sides'
+    distinct shingle sets, read from the SAME persisted frame the
+    banding used instead of rebuilding the shingle pipeline from the
+    corpus (drop_short is output-neutral here: candidates only ever
+    reference banded docs).  Returns (frame, persisted handle)."""
+    cand, enr = _lsh_candidate_pairs(spark, sf_dir, with_sets=True)
+    a = enr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = enr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    return cand.join(a, "doc_a").join(b, "doc_b"), enr
 
 
 DEDUPE_MINHASH_LSH_SQL = """
@@ -446,15 +456,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the verify stage of the near-dup pipeline): candidates from
     :func:`dedupe_minhash_lsh`, shingle sets rebuilt per side, pairs kept
     at jaccard >= 0.2.  Staged projections per BENCH.md finding #7."""
-    # the LSH helper's persisted frame carries the distinct shingle sets
-    # (with_sets=True), so the verify stage reads the SAME
-    # materialization the banding used instead of rebuilding the shingle
-    # pipeline from the corpus (drop_short is output-neutral here:
-    # candidates only ever reference banded docs)
-    cand, enr = _lsh_candidate_pairs(spark, sf_dir, 64, with_sets=True)
-    a = enr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = enr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(a, "doc_a").join(b, "doc_b")
+    j, enr = _lsh_candidate_sets(spark, sf_dir)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
     union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
     from hashio_spark.caching import track
@@ -866,13 +868,6 @@ _ANN_QUERY_IDS = (0, 1, 2)
 _ANN_K = 5
 
 
-def _cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    nb = F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    return dot / F.sqrt(na * nb)
-
-
 def _emb_double(spark, sf_dir):
     return _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("ve")
@@ -965,6 +960,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(x*1000)) against integer plane components, so every engine
     gets bit-identical buckets — integer dot products stay < 2^53 and are
     exact in double arithmetic regardless of summation order."""
+    from hashio_spark.operators.dedupe import lsh_self_join
     from hashio_spark.operators.similarity import banded_sign_vals, dot_arrow
 
     e = _emb_double(spark, sf_dir)
@@ -974,13 +970,13 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the matmul is bit-identical to the oracle's sequential
     # list_dot_product folds (proof in banded_sign_vals's docstring)
     base = e.select("vec_id", "ve", nrm.alias("nrm")).persist()
-    # bands carries ONLY (vec_id, band_id, band_val): the candidate join
+    # bands carries ONLY (key, band_id, band_val): the candidate join
     # shuffles 3 narrow columns, never the vectors; vectors re-join from
     # `base` AFTER the pair set is distinct, so each unordered pair is
     # re-ranked exactly once (a pair agreeing in k bands used to fold
     # its 64-element dot k times before the old post-rerank distinct)
     bands = base.select(
-        "vec_id",
+        F.col("vec_id").alias("key"),
         F.posexplode(
             banded_sign_vals(
                 F.col("ve"),
@@ -991,17 +987,8 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_id", "band_val"),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= _NEARDUP_MAX_BUCKET)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("vec_id").alias("a_id"), "band_id", "band_val")
-    b = ok.select(F.col("vec_id").alias("b_id"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    cand = lsh_self_join(bands, _NEARDUP_MAX_BUCKET).select(
+        F.col("key_a").alias("a_id"), F.col("key_b").alias("b_id")
     )
     va = base.select(F.col("vec_id").alias("a_id"), F.col("ve").alias("a_ve"), F.col("nrm").alias("a_n"))
     vb = base.select(F.col("vec_id").alias("b_id"), F.col("ve").alias("b_ve"), F.col("nrm").alias("b_n"))
@@ -1092,6 +1079,7 @@ def embedding_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors quantized to integers against integer plane components — dot
     products < 2^53, exact in doubles, so the matmul is bit-identical to
     the oracle's sequential folds."""
+    from hashio_spark.operators.dedupe import lsh_self_join
     from hashio_spark.operators.similarity import banded_sign_vals, dot_arrow
 
     e = _emb_double(spark, sf_dir)
@@ -1102,22 +1090,13 @@ def embedding_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow bands + distinct-before-rerank + Arrow re-rank: same shape
     # and rationale as embedding_neardup above
     bands = base.select(
-        "vec_id",
+        F.col("vec_id").alias("key"),
         F.posexplode(
             banded_sign_vals(F.col("ve"), planes, _SCALED_BANDS, bits, quantize=1000.0)
         ).alias("band_id", "band_val"),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= _SCALED_MAX_BUCKET)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("vec_id").alias("a_id"), "band_id", "band_val")
-    b = ok.select(F.col("vec_id").alias("b_id"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    cand = lsh_self_join(bands, _SCALED_MAX_BUCKET).select(
+        F.col("key_a").alias("a_id"), F.col("key_b").alias("b_id")
     )
     va = base.select(F.col("vec_id").alias("a_id"), F.col("ve").alias("a_ve"), F.col("nrm").alias("a_n"))
     vb = base.select(F.col("vec_id").alias("b_id"), F.col("ve").alias("b_ve"), F.col("nrm").alias("b_n"))
@@ -1181,15 +1160,6 @@ WHERE list_dot_product(a.ve, b.ve) / (a.nrm * b.nrm) >= 0.45
 
 
 EMBEDDING_NEARDUP_SCALED_SQL = _neardup_scaled_sql()
-
-
-LEGACY_EMBEDDING_NEARDUP_SQL = """
-WITH e AS (SELECT vec_id, cast(embedding AS double[]) AS ve FROM embeddings)
-SELECT a.vec_id AS a_id, b.vec_id AS b_id
-FROM e a, e b
-WHERE a.vec_id < b.vec_id
-  AND list_dot_product(a.ve, b.ve) / sqrt(list_dot_product(a.ve, a.ve) * list_dot_product(b.ve, b.ve)) >= 0.45
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1700,15 +1670,20 @@ def dedupe_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     this closes the dedup story pairs → clusters → keep-one.  Iterative
     min-label propagation (operators/graph.py) — rounds = graph
     diameter, which for LSH near-clique graphs is 2-4."""
+    from hashio_spark.caching import carry, release
     from hashio_spark.operators.graph import duplicate_clusters
 
     pairs = dedupe_minhash_lsh(spark, sf_dir)
-    out = duplicate_clusters(pairs, "doc_a", "doc_b")
-    return out.select(
+    clusters = duplicate_clusters(pairs, "doc_a", "doc_b")
+    # the clustering has materialized its edge set, so the LSH frame is
+    # no longer read by the returned plan
+    release(pairs)
+    out = clusters.select(
         F.col("key").alias("doc_id"),
         F.col("cluster_id"),
         F.col("keep").cast("int").alias("keep"),
     )
+    return carry(out, clusters)
 
 
 DEDUPE_CLUSTERS_SQL = f"""
@@ -2374,6 +2349,7 @@ def jaccard_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys), DuckDB's is the token string — different candidate sets, but
     both verify candidates EXACTLY against the real shingle sets, so the
     outputs are identical."""
+    from hashio_spark.caching import carry
     from hashio_spark.functions.text import word_shingles_from_tokens
     from hashio_spark.operators.setsim import jaccard_join
 
@@ -2382,9 +2358,8 @@ def jaccard_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle lambda re-executes per array element (BENCH finding #7)
     toked = d.select("doc_id", F.split("text", r"\s+").alias("_toks"))
     sets_df = toked.select("doc_id", word_shingles_from_tokens("_toks", 3).alias("sh"))
-    return jaccard_join(sets_df, "doc_id", "sh", threshold=0.8).withColumnsRenamed(
-        {"id_a": "doc_a", "id_b": "doc_b"}
-    )
+    pairs = jaccard_join(sets_df, "doc_id", "sh", threshold=0.8)
+    return carry(pairs.withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"}), pairs)
 
 
 JACCARD_PAIRS_EXACT_SQL = """
@@ -2738,17 +2713,20 @@ REGISTRY["zscore_outliers"] = (zscore_outliers_q, ZSCORE_OUTLIERS_SQL)
 
 
 def crosscorpus_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paraphrase-level decontamination (md5 oracle twin of
-    ``operators/decontaminate.crosscorpus_neardup``): train docs (source
-    != 'src0') whose 3-shingle set near-duplicates a benchmark doc
-    (source == 'src0'), via the same 4-perm/2-band MinHash LSH as
-    :func:`dedupe_minhash_lsh` — but BIPARTITE: the tiny benchmark band
-    table broadcasts, so the train corpus is never shuffled for the
-    candidate join (the scale story vs the self-join's band shuffle).
-    Candidates then pass exact Jaccard >= 0.2 with the benchmark shingle
-    sets also broadcast.  Production tier: xxhash64 signatures, n_perm=16
-    (`crosscorpus_neardup`)."""
+    """Paraphrase-level decontamination: train docs (source != 'src0')
+    whose 3-shingle set near-duplicates a benchmark doc (source ==
+    'src0'), via the same 4-perm/2-band md5 MinHash bands as
+    :func:`dedupe_minhash_lsh` fed to the bipartite candidate + Jaccard
+    stage of ``operators/decontaminate.crosscorpus_neardup``
+    (``bipartite_neardup``): the tiny benchmark band table broadcasts,
+    so the train corpus is never shuffled for the candidate join, and
+    candidates pass exact Jaccard >= 0.2 with the benchmark shingle sets
+    also broadcast.  Band sizes are counted only over the train bands
+    the benchmark shares (``bench_present``) — output-identical to the
+    oracle, which counts over all train bands."""
+    from hashio_spark.caching import track
     from hashio_spark.functions.digests import minhash4_md5_arrow
+    from hashio_spark.operators.decontaminate import bench_present, bipartite_neardup
 
     d = _t(spark, sf_dir, "documents").filter(
         F.size(F.split(F.col("text"), " ")) >= 3
@@ -2767,46 +2745,19 @@ def crosscorpus_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_s.sh").alias("sh"),
         *[F.col(f"_s.sig{k}").alias(f"sig{k}") for k in range(4)],
     ).persist()
-
-    def _bands(df, key_out):
-        # both bands from one pass (same explode form as dedupe_minhash_lsh)
-        return df.select(
-            F.col("doc_id").alias(key_out),
-            F.explode(
-                F.array(
-                    F.concat_ws("_", F.lit("b0"), "sig0", "sig1"),
-                    F.concat_ws("_", F.lit("b1"), "sig2", "sig3"),
-                )
-            ).alias("band"),
-        )
-
-    train_b = _bands(enriched.filter(F.col("source") != "src0"), "doc_id")
-    bench_b = _bands(enriched.filter(F.col("source") == "src0"), "bench_id")
-    # size the train bands AFTER a broadcast semi-join against the bench
-    # bands: bands absent from the benchmark yield no candidates whatever
-    # the cap, so the restriction is output-identical (the oracle counts
-    # over all train bands) while the size agg's input shrinks from the
-    # full banded corpus to the bench-present slice
-    hits = train_b.join(
-        F.broadcast(bench_b.select("band").distinct()), "band", "left_semi"
+    train = enriched.filter(F.col("source") != "src0")
+    bench = enriched.filter(F.col("source") == "src0")
+    bench_b = _md5_bands(bench)
+    out = bipartite_neardup(
+        bench_present(_md5_bands(train), bench_b),
+        bench_b,
+        train.select(F.col("doc_id").alias("key"), "sh"),
+        bench.select(F.col("doc_id").alias("key"), "sh"),
+        max_band_size=64,
+        min_jaccard=0.2,
     )
-    sizes = hits.groupBy("band").agg(F.count(F.lit(1)).alias("n"))
-    ok = hits.join(F.broadcast(sizes.filter(F.col("n") <= 64)), "band")
-    cand = ok.join(F.broadcast(bench_b), "band").select("doc_id", "bench_id").distinct()
-
-    tr = enriched.filter(F.col("source") != "src0").select("doc_id", F.col("sh").alias("sh_t"))
-    be = enriched.filter(F.col("source") == "src0").select(
-        F.col("doc_id").alias("bench_id"), F.col("sh").alias("sh_b")
-    )
-    j = cand.join(tr, "doc_id").join(F.broadcast(be), "bench_id")
-    inter = F.size(F.array_intersect(F.col("sh_t"), F.col("sh_b"))).cast("double")
-    union = F.size(F.array_union(F.col("sh_t"), F.col("sh_b"))).cast("double")
-    jac = F.round(inter / union, 6)
-    from hashio_spark.caching import track
-
     return track(
-        j.select("doc_id", "bench_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.2),
+        out.select(F.col("train_key").alias("doc_id"), F.col("bench_key").alias("bench_id"), "jaccard"),
         enriched,
     )
 
@@ -2868,12 +2819,11 @@ def split_leakage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of doc_id (same md5 hash gate as :func:`split_assign`), so
     the audit NEVER joins the corpus — a per-row projection on the pair
     table plus one hash-aggregate, regardless of corpus size."""
-    from hashio_spark.caching import track
+    from hashio_spark.caching import carry
     from hashio_spark.operators.sampling import split_leakage
 
     pairs = dedupe_minhash_lsh(spark, sf_dir)
-    out = split_leakage(pairs, method="md5").orderBy("split_a", "split_b")
-    return track(out, *getattr(pairs, "_hashio_persisted", ()))
+    return carry(split_leakage(pairs, method="md5").orderBy("split_a", "split_b"), pairs)
 
 
 def _split_case_sql(col: str) -> str:
@@ -3717,12 +3667,7 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as :func:`ngram_jaccard`: candidates only (never
     all-pairs), staged shingle-set projections, one intersect per pair;
     the intersection is computed once and reused for both directions."""
-    # same shared-materialization shape as ngram_jaccard: the LSH frame
-    # carries the distinct shingle sets for the verify stage
-    cand, enr = _lsh_candidate_pairs(spark, sf_dir, 64, with_sets=True)
-    a = enr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = enr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(a, "doc_a").join(b, "doc_b")
+    j, enr = _lsh_candidate_sets(spark, sf_dir)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
     out = j.select(
         "doc_a", "doc_b",

@@ -23,8 +23,8 @@ Storage backends:
   ``worker.py:360-390``).
 
 Resume contract (the reference's incremental re-verify,
-``worker.py:230-244``): :func:`pending_partitions` anti-joins the work
-table against completed manifest rows, so an interrupted run re-executes
+``worker.py:230-244``): :func:`pending_partitions` drops work rows whose
+partition already has a manifest row, so an interrupted run re-executes
 only unfinished partitions and re-running a finished run is a no-op.
 """
 
@@ -309,12 +309,16 @@ class ManifestStore:
         )
 
     def pending_partitions(self, work: DataFrame, run_id: str, algo: str) -> DataFrame:
-        """Resume anti-join: drop work rows whose partition already has a
-        manifest row for this (run_id, algo).  The completed set is tiny
-        (one row per partition) → broadcast, zero shuffle on the work
-        side."""
-        done = self.completed_partitions(run_id, algo)
-        return work.join(F.broadcast(done), "partition_id", "left_anti")
+        """Resume filter: drop work rows whose partition already has a
+        manifest row for this (run_id, algo).  The completed ids are
+        collected (one row per partition) and applied as an ``isin``
+        literal, so the returned plan never reads the store: a
+        lazy read would be re-executed after :meth:`merge` has swapped the
+        run's files out (``FILE_NOT_EXIST``)."""
+        done = [r.partition_id for r in self.completed_partitions(run_id, algo).collect()]
+        pid = F.col("partition_id")
+        # isNull keeps the anti-join semantics: a NULL key matches nothing
+        return work.filter(pid.isNull() | ~pid.isin(done))
 
     def snapshot(self, run_id: str) -> DataFrame:
         return self.read().filter(F.col("run_id") == run_id)

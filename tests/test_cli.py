@@ -421,3 +421,36 @@ def test_validate_derives_partition_id_when_absent(spark, tmp_path, capsys):
     for r in mf.collect():
         rows.setdefault(r.run_id, []).append((r.partition_id, r.digest))
     assert sorted(rows["bare"]) == sorted(rows["bare2"])
+
+
+def test_validate_resume_then_violations_out(spark, tmp_path, capsys):
+    """An interrupted run finished with ``--resume --violations-out``:
+    the violations are computed after the merge has rewritten the run's
+    manifest files, so the resumed input must not read the store
+    lazily.  The finished manifest equals a clean full run."""
+    from pyspark.sql import functions as F
+
+    from hashio_spark.datagen import asset_catalog, documents_interleaved
+    from hashio_spark.sources.manifest_store import ManifestStore
+
+    full, part, cat = (str(tmp_path / n) for n in ("docs", "part", "catalog"))
+    docs = documents_interleaved(spark, n_docs=400, n_partitions=4)
+    docs.write.parquet(full)
+    spark.read.parquet(full).filter(F.col("partition_id").isin(0, 2)).write.parquet(part)
+    asset_catalog(spark, 100).write.parquet(cat)
+    store, clean, viol = (str(tmp_path / n) for n in ("m", "clean", "viol"))
+
+    assert main(["validate", "--input", part, "--catalog", cat, "--manifest", store, "--run-id", "R"]) == 0
+    assert main(["validate", "--input", full, "--catalog", cat, "--manifest", store, "--run-id", "R",
+                 "--resume", "--violations-out", viol]) == 0
+    assert main(["validate", "--input", full, "--catalog", cat, "--manifest", clean, "--run-id", "R"]) == 0
+    capsys.readouterr()
+
+    def manifest(path):
+        rows = ManifestStore(spark, path).snapshot("R").select("partition_id", "algo", "digest", "row_count")
+        return sorted(tuple(r) for r in rows.collect())
+
+    got = manifest(store)
+    assert got == manifest(clean)
+    assert [r[0] for r in got] == [0, 1, 2, 3]
+    assert spark.read.parquet(viol).count() > 0

@@ -546,3 +546,46 @@ def test_dedupe_normalized_catches_case_punct_variants(spark):
         F.concat(F.upper("text"), F.lit("!!  ")).alias("text"))
     aug = d.select("doc_id", "text").unionByName(mang)
     assert aug.groupBy(F.md5("text")).count().filter("count >= 2").count() == 0
+
+
+def test_lsh_self_join_band_cap_and_pair_order(spark):
+    """The self-join stage every MinHash-LSH tier shares: a band with one
+    member yields nothing, a band of exactly ``max_band_size`` members
+    yields all its pairs, one member more drops the band whole; pairs
+    come out once each with key_a < key_b, even when they share bands."""
+    from itertools import combinations
+
+    from hashio_spark.operators.dedupe import lsh_self_join
+
+    rows = [(k, 0, "big") for k in range(5)]            # 5 members: over the cap
+    rows += [(k, 0, "ok") for k in (10, 11, 12, 13)]    # exactly at the cap
+    rows += [(k, 1, "ok") for k in (13, 12)]            # same value, other band_id
+    rows += [(20, 0, "solo")]
+    bands = spark.createDataFrame(rows, "key long, band_id int, band_val string")
+    got = sorted(tuple(r) for r in lsh_self_join(bands, max_band_size=4).collect())
+    assert got == sorted(combinations((10, 11, 12, 13), 2))
+    assert len(lsh_self_join(bands, max_band_size=5).collect()) == 6 + 10
+
+
+def test_bipartite_neardup_counts_only_bench_present_bands(spark):
+    """The bipartite stage caps TRAIN band sizes, counted only over the
+    bands the benchmark shares: a crowded train band the benchmark does
+    not occupy neither matches nor counts against the cap."""
+    from hashio_spark.operators.decontaminate import bench_present, bipartite_neardup
+
+    train_b = spark.createDataFrame(
+        [(1, 0, "x"), (2, 0, "x"), (3, 0, "y")] + [(k, 0, "crowd") for k in range(10, 20)],
+        "key long, band_id int, band_val string",
+    )
+    bench_b = spark.createDataFrame([(100, 0, "x"), (101, 0, "y"), (101, 1, "x")],
+                                    "key long, band_id int, band_val string")
+    sets = "key long, sh array<string>"
+    train_s = spark.createDataFrame([(1, ["a", "b"]), (2, ["a", "c"]), (3, ["q"])], sets)
+    bench_s = spark.createDataFrame([(100, ["a", "b"]), (101, ["q", "r"])], sets)
+    hits = bench_present(train_b, bench_b)
+    assert sorted(r.key for r in hits.collect()) == [1, 2, 3]
+    got = sorted(tuple(r) for r in bipartite_neardup(hits, bench_b, train_s, bench_s, 2, 0.3).collect())
+    assert got == [(1, 100, 1.0), (2, 100, 0.333333), (3, 101, 0.5)]
+    # band (0, "x") has two train members: a cap of 1 drops it whole
+    got = [tuple(r) for r in bipartite_neardup(hits, bench_b, train_s, bench_s, 1, 0.3).collect()]
+    assert got == [(3, 101, 0.5)]

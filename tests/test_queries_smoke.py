@@ -2,6 +2,8 @@
 (Value-level correctness vs DuckDB is enforced by tools/oracle_check.py
 and the driver's CORRECTNESS gate at sf0.01.)"""
 
+import hashlib
+
 import duckdb
 import pytest
 
@@ -57,3 +59,36 @@ def test_spark_and_oracle_columns_match(spark):
         s_cols = sorted(fn(spark, SF).columns)
         d_cols = sorted(c[0] for c in con.execute(sql).description)
         assert s_cols == d_cols, f"{name}: spark={s_cols} duck={d_cols}"
+
+
+def test_registry_oracle_sql_fingerprint():
+    """The oracle SQL strings are a fixed contract: a refactor of the
+    Spark side must never reach them."""
+    h = hashlib.sha256()
+    for name in sorted(REGISTRY):
+        h.update(f"{name}\0{REGISTRY[name][1]}\0".encode())
+    assert len(REGISTRY) == 86
+    assert h.hexdigest() == "f3c74318ad7d9b93ca0ce430f6c2187056e6d202a53e80883e44d5c6e3eed7f0"
+
+
+def test_lsh_legs_release_every_persisted_handle(spark):
+    """After collect() + caching.release, no near-dup leg leaves a cached
+    RDD behind — a long-lived session re-running them must not accumulate
+    executor memory (renames and post-processing must carry the
+    handles the operators attached)."""
+    from hashio_spark import caching
+
+    # earlier tests may have left an equal plan cached; a leg's persist()
+    # would then reuse it and its release drop it, hiding a leak
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    leaked = {}
+    for name in ("dedupe_minhash_lsh", "ngram_jaccard", "ngram_containment", "split_leakage",
+                 "dedupe_clusters", "crosscorpus_neardup", "jaccard_pairs_exact"):
+        start = persistent().size()
+        df = REGISTRY[name][0](spark, SF)
+        df.collect()
+        caching.release(df)
+        if persistent().size() != start:
+            leaked[name] = persistent().size() - start
+    assert leaked == {}
